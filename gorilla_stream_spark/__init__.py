@@ -24,6 +24,13 @@ LLM training-data operators (round 2):
     cosine_neardup_pairs(df) / ann_search(enc, queries)
 """
 
+# first: a Spark Python worker imports the package when it unpickles any of
+# its kernels, and from then on skips re-reading unchanged zip archives at
+# every task start (see _zipcache)
+from gorilla_stream_spark import _zipcache
+
+_zipcache.install()
+
 from gorilla_stream_spark.analyze import analyze_and_recommend
 from gorilla_stream_spark.engine import (
     compact_blocks,

@@ -206,6 +206,10 @@ def rle_decode(buf: bytes) -> np.ndarray:
         raise ValueError(
             f"rle stream counts {vals.size}/{lens.size} != n_runs {nruns}"
         )
+    # bound every run before summing: lengths near 2^63 wrap the int64 sum
+    # back onto n and would reach np.repeat
+    if lens.size and (lens.min() < 1 or lens.max() > n):
+        raise ValueError(f"rle run length outside [1, {n}]")
     if lens.sum() != n:  # corrupt header must not turn into a giant repeat
         raise ValueError(f"rle run lengths sum {lens.sum()} != count {n}")
     return np.repeat(vals, lens)

@@ -43,6 +43,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gorilla_stream_spark.codecs.intcodecs import _DENSE_RANGE_CAP
 from gorilla_stream_spark.engine import _flatten_arrow
 
 __all__ = [
@@ -207,8 +208,64 @@ def _collect_dict(dict_df: DataFrame, max_vocab: int) -> tuple[np.ndarray, np.nd
     return toks, ranks
 
 
+def _dense_lut(toks: np.ndarray, ranks32: np.ndarray) -> np.ndarray | None:
+    """token - toks[0] -> rank (-1 for absent) as one int32 LUT, or None when
+    the token span exceeds ``_DENSE_RANGE_CAP`` (8 MB of int32 per task)."""
+    if not toks.size or int(toks[-1]) - int(toks[0]) + 1 > _DENSE_RANGE_CAP:
+        return None
+    lut = np.full(int(toks[-1]) - int(toks[0]) + 1, -1, dtype=np.int32)
+    lut[(toks - np.int64(toks[0])).astype(np.intp)] = ranks32
+    return lut
+
+
+def _remap_flat(
+    flat: np.ndarray, toks: np.ndarray, ranks32: np.ndarray, lut: np.ndarray | None, strict: bool
+) -> np.ndarray:
+    """token -> int32 rank over a flat token array (-1 for unknowns when not
+    ``strict``).  Every real tokenizer vocabulary spans a compact id range,
+    so token -> rank is one LUT gather (O(n)); sparse/wide vocabularies
+    (``lut is None``) take a searchsorted (O(n log V)).  Identical results."""
+    if toks.size == 0:
+        if strict and flat.size:
+            raise ValueError("empty global dictionary with non-empty tokens")
+        return np.full(flat.shape, -1, dtype=np.int32)
+    if lut is not None:
+        lo_t = np.int64(toks[0])
+        hi_t = np.int64(toks[-1])
+        # chunked gather: the int64 index temporary stays ~16 MB so
+        # worker heap is reused batch-to-batch (engine
+        # _KERNEL_SLICE_TOKENS rationale)
+        out = np.empty(flat.shape, dtype=np.int32)
+        ch = 2_000_000
+        for s0 in range(0, flat.size, ch):
+            seg = flat[s0 : s0 + ch]
+            inb = (seg >= lo_t) & (seg <= hi_t)
+            if inb.all():
+                out[s0 : s0 + ch] = lut[(seg.astype(np.int64) - lo_t)]
+            else:
+                o = np.full(seg.shape, -1, dtype=np.int32)
+                if inb.any():
+                    o[inb] = lut[(seg[inb].astype(np.int64) - lo_t)]
+                out[s0 : s0 + ch] = o
+    else:
+        toks_t = toks.astype(flat.dtype, copy=False)
+        pos = np.searchsorted(toks_t, flat)
+        safe = np.minimum(pos, toks_t.size - 1)
+        hit = (pos < toks_t.size) & (toks_t[safe] == flat)
+        out = np.where(hit, ranks32[safe], np.int32(-1))
+    if strict and flat.size:
+        miss = int((out < 0).sum())
+        if miss:
+            raise ValueError(
+                f"{miss} token(s) absent from the global"
+                " dictionary — rebuild the dict over the full"
+                " corpus or pass strict=False (maps to -1)"
+            )
+    return out
+
+
 def _remap_fn(tokens_col: str, bc, strict: bool, inverse: bool):
-    """Shared Arrow kernel for remap (searchsorted) and unmap (gather)."""
+    """Shared Arrow kernel for remap (token -> rank) and unmap (gather)."""
     import pyarrow as pa
 
     def fn(batches: Iterator) -> Iterator:
@@ -217,24 +274,16 @@ def _remap_fn(tokens_col: str, bc, strict: bool, inverse: bool):
         # then runs int32 in -> int32 out with no widening copies — the old
         # int64 path copied every batch twice (flatten widen + final cast)
         ranks32 = ranks.astype(np.int32, copy=False)
-        # dense fast path: every real tokenizer vocabulary spans a compact
-        # id range, so token -> rank is one LUT gather (O(n)) instead of a
-        # searchsorted (O(n log V)); sparse/wide vocabularies keep the
-        # searchsorted path (identical results, pinned by tests)
-        lut = None
-        if toks.size and int(toks[-1]) - int(toks[0]) < (1 << 24):
-            lo_t = np.int64(toks[0])
-            lut = np.full(int(toks[-1]) - int(toks[0]) + 1, -1, dtype=np.int32)
-            lut[(toks - lo_t).astype(np.intp)] = ranks32
         if inverse:
             # ranks are dense 0..V-1 -> direct int32 gather table
             inv = np.empty(ranks.size, dtype=np.int32)
             inv[ranks] = toks.astype(np.int32)
+        else:
+            lut = _dense_lut(toks, ranks32)
         for rb in batches:
             idx = rb.schema.get_field_index(tokens_col)
             tok_arr = rb.column(idx)
             flat, lens = _flatten_arrow(tok_arr, dtype=None)
-            toks_t = toks.astype(flat.dtype, copy=False)
             if inverse:
                 if flat.size and (flat.min() < 0 or flat.max() >= ranks.size):
                     raise ValueError(
@@ -242,50 +291,8 @@ def _remap_fn(tokens_col: str, bc, strict: bool, inverse: bool):
                         " produced by remap_tokens with this dictionary"
                     )
                 out = inv[flat] if flat.size else flat.astype(np.int32)
-            elif toks.size == 0:
-                if strict and flat.size:
-                    raise ValueError("empty global dictionary with non-empty tokens")
-                out = np.full(flat.shape, -1, dtype=np.int32)
-            elif lut is not None:
-                lo_t = np.int64(toks[0])
-                hi_t = np.int64(toks[-1])
-                # chunked gather: the int64 index temporary stays ~16 MB so
-                # worker heap is reused batch-to-batch (engine
-                # _KERNEL_SLICE_TOKENS rationale)
-                out = np.empty(flat.shape, dtype=np.int32)
-                ch = 2_000_000
-                for s0 in range(0, flat.size, ch):
-                    seg = flat[s0 : s0 + ch]
-                    inb = (seg >= lo_t) & (seg <= hi_t)
-                    if inb.all():
-                        out[s0 : s0 + ch] = lut[(seg.astype(np.int64) - lo_t)]
-                    else:
-                        o = np.full(seg.shape, -1, dtype=np.int32)
-                        if inb.any():
-                            o[inb] = lut[(seg[inb].astype(np.int64) - lo_t)]
-                        out[s0 : s0 + ch] = o
-                if strict and flat.size:
-                    miss = int((out < 0).sum())
-                    if miss:
-                        raise ValueError(
-                            f"{miss} token(s) absent from the global"
-                            " dictionary — rebuild the dict over the full"
-                            " corpus or pass strict=False (maps to -1)"
-                        )
             else:
-                pos = np.searchsorted(toks_t, flat)
-                safe = np.minimum(pos, toks_t.size - 1)
-                hit = (pos < toks_t.size) & (toks_t[safe] == flat)
-                if strict:
-                    if flat.size and not hit.all():
-                        raise ValueError(
-                            f"{int((~hit).sum())} token(s) absent from the global"
-                            " dictionary — rebuild the dict over the full"
-                            " corpus or pass strict=False (maps to -1)"
-                        )
-                    out = ranks32[safe] if flat.size else flat.astype(np.int32)
-                else:
-                    out = np.where(hit, ranks32[safe], np.int32(-1))
+                out = _remap_flat(flat, toks, ranks32, lut, strict)
             offsets = np.concatenate(([0], np.cumsum(lens))).astype(np.int32)
             new_col = pa.ListArray.from_arrays(
                 pa.array(offsets, type=pa.int32()),

@@ -572,3 +572,24 @@ def test_rle_decode_rejects_mismatched_stream_counts():
         decode_array(bytes(buf))
     # intact buffers still round-trip
     np.testing.assert_array_equal(decode_array(bytes(encode_array(vals, codec="rle"))), vals)
+
+
+def test_rle_decode_rejects_wrapping_run_lengths():
+    # lens [2^63-1, 2^63-1, n+2] sum to n modulo 2^64: the sum guard alone
+    # passes them on to np.repeat
+    import struct as _struct
+
+    n = 10
+    big = np.iinfo(np.int64).max
+    vbuf = intcodecs.for_encode(np.array([1, 2, 3], dtype=np.int64))
+    lbuf = intcodecs.for_encode(np.array([big, big, n + 2], dtype=np.int64))
+    assert int(np.array([big, big, n + 2], dtype=np.int64).sum()) == n
+    buf = _struct.pack("<III", n, 3, len(vbuf)) + vbuf + lbuf
+    with pytest.raises(ValueError, match="rle run length"):
+        intcodecs.rle_decode(buf)
+    for lens in ([0, n], [-1, n + 1], [n + 1]):
+        lens = np.array(lens, dtype=np.int64)
+        vb = intcodecs.for_encode(np.arange(lens.size, dtype=np.int64))
+        bad = _struct.pack("<III", n, lens.size, len(vb)) + vb + intcodecs.for_encode(lens)
+        with pytest.raises(ValueError, match="rle run length"):
+            intcodecs.rle_decode(bad)

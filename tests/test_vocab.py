@@ -161,3 +161,51 @@ class TestCompareCorpora:
 
         rows = compare_corpora(small, small).collect()
         assert rows and all(abs(r["log2_ratio"]) < 1e-12 for r in rows)
+
+
+@pytest.mark.parametrize("delta", [-1, 0, 1])
+def test_dense_lut_cap_boundary_paths_agree(delta):
+    """Token spans at the dense-LUT cap -1/0/+1: the LUT and searchsorted
+    paths give identical remaps, and the inverse gather undoes both."""
+    from gorilla_stream_spark.codecs.intcodecs import _DENSE_RANGE_CAP
+    from gorilla_stream_spark.vocab import _dense_lut, _remap_flat
+
+    span = _DENSE_RANGE_CAP + delta  # LUT length = toks[-1] - toks[0] + 1
+    rng = np.random.default_rng(span)
+    lo = 1000
+    inner = rng.choice(np.arange(lo + 1, lo + span - 1), 5000, replace=False)
+    toks = np.unique(np.concatenate(([lo, lo + span - 1], inner))).astype(np.int64)
+    ranks = rng.permutation(toks.size).astype(np.int64)
+    ranks32 = ranks.astype(np.int32)
+    lut = _dense_lut(toks, ranks32)
+    assert (lut is None) == (delta > 0)
+    if lut is None:  # force the other path for the comparison
+        lut = np.full(span, -1, dtype=np.int32)
+        lut[toks - lo] = ranks32
+    flat = rng.choice(toks, 20_000).astype(np.int32)
+    dense = _remap_flat(flat, toks, ranks32, lut, strict=True)
+    sparse = _remap_flat(flat, toks, ranks32, None, strict=True)
+    np.testing.assert_array_equal(dense, sparse)
+    inv = np.empty(ranks.size, dtype=np.int32)
+    inv[ranks] = toks.astype(np.int32)
+    np.testing.assert_array_equal(inv[dense], flat)
+    # unknowns (in and out of the span) map to -1 on both paths
+    odd = np.array([lo - 1, lo + span, *np.setdiff1d(np.arange(lo, lo + 50), toks)[:3]], np.int32)
+    for path_lut in (lut, None):
+        np.testing.assert_array_equal(
+            _remap_flat(odd, toks, ranks32, path_lut, strict=False), np.full(odd.size, -1)
+        )
+        with pytest.raises(ValueError, match="absent from the global"):
+            _remap_flat(odd, toks, ranks32, path_lut, strict=True)
+
+
+def test_remap_roundtrip_above_dense_cap(spark):
+    from gorilla_stream_spark.codecs.intcodecs import _DENSE_RANGE_CAP
+
+    hi = 7 + _DENSE_RANGE_CAP  # span cap + 1 -> searchsorted in the worker
+    df = _corpus(spark, [("a", [7, hi, 7, 50], "s"), ("b", [hi, 50], "s")])
+    d = build_global_dict(df)
+    remapped = {r["doc_id"]: r["tokens"] for r in remap_tokens(df, d).collect()}
+    assert remapped == {"a": [0, 2, 0, 1], "b": [2, 1]}  # ties: ascending token
+    back = {r["doc_id"]: r["tokens"] for r in unmap_tokens(remap_tokens(df, d), d).collect()}
+    assert back == {"a": [7, hi, 7, 50], "b": [hi, 50]}
